@@ -3,8 +3,9 @@
 # bypassing sbt (no project-lock contention between concurrent heavy
 # runs; same JDK17 add-opens set as build.sbt / spark-submit).
 # Usage: scripts/run_graft.sh <mainClass> [args...]
-#   SPARK_DRIVER_MEM (default 8g) sizes -Xmx; SPARK_GRAFT_CPUS is read
-#   by the mains themselves.
+#   SPARK_DRIVER_MEM (default 8g) sizes -Xmx; SPARK_GRAFT_CPUS (default:
+#   every processor) is read by graft.Sessions, which also sets the
+#   session confs (UI off, UTC, ...).
 set -eu
 cd "$(dirname "$0")/.."
 MAIN=$1; shift
@@ -20,6 +21,5 @@ for p in $OPENS; do ADD="$ADD --add-opens $p=ALL-UNNAMED"; done
 # scale experiments
 exec java $ADD ${SPARK_EXTRA_OPTS:-} \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

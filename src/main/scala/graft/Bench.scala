@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: times every registered query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line {"metric","value","unit","queries","errors","sf"}.
   *
@@ -15,17 +14,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val fullJsonPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "target/bench_full.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench")
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     sorted.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
@@ -95,16 +86,13 @@ object Bench {
     // availableProcessors made the 8-cpu scaling artifact self-label 32,
     // which would poison any future scaling diagnosis); the machine's
     // physical count stays available as machine_cpus.
-    val nCpus =
-      if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus
-      else Runtime.getRuntime.availableProcessors.toString
     val env = s""""load_avg_start":${r("%.2f", load0)},""" +
       s""""load_avg_end":${r("%.2f", load1)},""" +
       s""""proc_cpu_sec":${r("%.1f", cpu1 - cpu0)},""" +
       s""""max_heap_gb":${r("%.1f", Runtime.getRuntime.maxMemory / 1e9)},""" +
       s""""memo_releases":$memoReleases,""" +
       s""""memo_release_sec":${r("%.1f", memoReleaseSec)},""" +
-      s""""n_cpus":$nCpus,""" +
+      s""""n_cpus":${Sessions.cores},""" +
       s""""machine_cpus":${Runtime.getRuntime.availableProcessors}"""
     def jstr(s: String): String =
       "\"" + s.flatMap {

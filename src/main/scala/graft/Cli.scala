@@ -5,8 +5,6 @@ import graft.sinks.FanOutWriter
 import graft.sources.BlockSources
 import graft.streaming.StreamPipeline
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.file.Paths
 
 /** The reference's CLI surface (etl-rust `src/main.rs:45-105`) as Spark
@@ -24,20 +22,6 @@ import java.nio.file.Paths
   * fan-out, exactly-once bookkeeping from the streaming checkpoint.
   */
 object GraftCli {
-  private[graft] def session(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   val tables: Seq[String] = Seq("blocks", "transactions", "account_refs")
 }
 
@@ -50,7 +34,7 @@ object IndexRange {
     val (start, end, outDir) = (args(0).toLong, args(1).toLong, args(2))
     val reverse = args.contains("--reverse")
     require(!(reverse && start == 0), "cannot index backwards from genesis") // main.rs:392-394
-    val spark = GraftCli.session("graft-index-range")
+    val spark = Sessions.local("graft-index-range")
     val metrics = new EngineMetrics(spark.sparkContext)
     // env:METRICS_PORT — reference serves Prometheus /metrics during the
     // run (src/main.rs:279-306, docs/environment-variables.md:20-27);
@@ -88,7 +72,7 @@ object IndexList {
     val (listPath, outDir) = (args(0), args(1))
     val owned = !org.apache.spark.sql.SparkSession.getDefaultSession
       .exists(s => !s.sparkContext.isStopped)
-    val spark = GraftCli.session("graft-index-list")
+    val spark = Sessions.local("graft-index-list")
     val ids = BlockSources.blockListCsv(spark, listPath).distinct()
     val blocks = BlockSources.blocksFromIds(ids)
     FanOutWriter.jsonl(outDir, GraftCli.tables).publishBlocks(blocks)
@@ -107,7 +91,7 @@ object SaveRange {
       sys.exit(2)
     }
     val (start, end, outDir) = (args(0).toLong, args(1).toLong, args(2))
-    val spark = GraftCli.session("graft-save-range")
+    val spark = Sessions.local("graft-save-range")
     BlockSources.blockRange(spark, start, end).write.mode("overwrite").parquet(outDir)
     println(s"[graft] saved [$start, $end) to $outDir")
     spark.stop()
@@ -125,7 +109,7 @@ object CreateTestSet {
     }
     val (start, end, name) = (args(0).toLong, args(1).toLong, args(2))
     val dir = args.lift(3).getOrElse("test_data") // TEST_EXAMPLE_DIRECTORY default
-    val spark = GraftCli.session("graft-create-test-set")
+    val spark = Sessions.local("graft-create-test-set")
     graft.sinks.FileSinks.writeGolden(
       BlockSources.blockRange(spark, start, end), dir, name, start, end)
     println(s"[graft] created test data: $dir/${name}_${start}_$end")
@@ -151,7 +135,7 @@ object CustomIndex {
     // it running; stop only a session this run created
     val owned = !org.apache.spark.sql.SparkSession.getDefaultSession
       .exists(s => !s.sparkContext.isStopped)
-    val spark = GraftCli.session("graft-custom-index")
+    val spark = Sessions.local("graft-custom-index")
     // class name comes from the CLI arg or GRAFT_CUSTOM_INDEXER; the
     // config constructor fail-fasts on an unresolvable/wrong-type class
     val cfg = graft.config.GraftConfig.fromEnv(
@@ -183,7 +167,7 @@ object IndexSubscription {
     }
     val Array(dropDir, outDir, ckptDir) = args.take(3)
     val follow = args.contains("--follow") // keep running vs catch-up-and-stop
-    val spark = GraftCli.session("graft-index-subscription")
+    val spark = Sessions.local("graft-index-subscription")
     val schema = BlockSources.blockRange(spark, 0, 1).schema
     val source = StreamPipeline.fileDropSource(spark, dropDir, schema)
     val writer = FanOutWriter.jsonl(outDir, GraftCli.tables)
@@ -242,7 +226,7 @@ object Subscribe {
     // it running; stop only a session this run created
     val owned = !org.apache.spark.sql.SparkSession.getDefaultSession
       .exists(s => !s.sparkContext.isStopped)
-    val spark = GraftCli.session("graft-subscribe")
+    val spark = Sessions.local("graft-subscribe")
     if (args.contains("--redeliver")) {
       val ids = WorkQueue.redeliverUnacked(queueDir, ackDir)
       println(s"[graft] redelivered ${ids.size} unacked message(s): ${ids.mkString(",")}")
@@ -290,7 +274,7 @@ object Curate {
     val (docsPath, outDir) = (args(0), args(1))
     val owned = !org.apache.spark.sql.SparkSession.getDefaultSession
       .exists(s => !s.sparkContext.isStopped)
-    val spark = GraftCli.session("graft-curate")
+    val spark = Sessions.local("graft-curate")
     import graft.queries.WebCurationQueries._
     val docs = spark.read.parquet(docsPath)
       .withColumn("raw_url", expr(graft.queries.WebCurationQueries.rawUrlExpr))

@@ -30,8 +30,10 @@ object Tables {
     * Keyed by session so a stopped session's handles are never served
     * to a new one. References are STRONG (a ConcurrentHashMap holds its
     * keys) — so, mirroring PlanCache, an application-end listener drops
-    * a session's entries when it stops; the live entry count is bounded
-    * by |open sessions|·|dirs|·|tables|.
+    * a session's entries when the application ends (SparkContext stop).
+    * A derived `newSession()` that is merely discarded keeps its
+    * entries until then; the live entry count is bounded by
+    * |sessions created|·|dirs|·|tables|.
     *
     * Assumes a (dir, table) parquet is immutable within one session —
     * true for every driver/test/stress path today (generators write to
@@ -74,7 +76,7 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** events.ts arrives in whatever physical shape the driver's generator
     * last wrote: TIMESTAMP(NANOS) parquet (Spark reads a raw nanos BIGINT
-    * under spark.sql.legacy.parquet.nanosAsLong, set in Verify/Bench/tests)
+    * under spark.sql.legacy.parquet.nanosAsLong, set by Sessions.local)
     * or TIMESTAMP(MICROS) without the UTC-adjusted flag (Spark reads
     * TIMESTAMP_NTZ). Normalize both to a true TimestampType (µs) here so
     * every query — unix_millis arithmetic, streaming watermarks — sees the

@@ -1,22 +1,10 @@
 package graft
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_SHUFFLE: initial shuffle partitions (default 32 = core
-    // count, the bench contract). At sf100 in one 32-core JVM, 32
-    // partitions put ~10× the per-partition bytes of the designed scale
-    // through each task — raising this is exactly what a real cluster's
-    // core count would do; AQE coalesces small stages back down.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    // SPARK_GRAFT_CPUS: thread count (default 32, the bench contract).
-    // Varying it at a FIXED heap is the bandwidth-vs-compute probe: a
-    // memory-bound stage keeps its wall time when threads drop 4x, a
-    // compute-bound one slows ~4x.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // SPARK_GRAFT_CPUS (read by Sessions): varying it at a FIXED heap is
+    // the bandwidth-vs-compute probe: a memory-bound stage keeps its wall
+    // time when threads drop 4x, a compute-bound one slows ~4x.
+    val spark = Sessions.local("graft-timeq")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Bench-comparable timings need Bench's warm-up policy: one pass at a

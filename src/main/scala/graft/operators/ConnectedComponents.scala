@@ -16,10 +16,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Why not plain label propagation: propagation needs O(diameter)
   * rounds; star operations contract chains in O(log²) rounds, and each
-  * round is only {groupBy min → join → project → distinct} — codegen'd
-  * hash aggregates and one shuffle each, no collect_list (a high-degree
-  * node never materializes its neighbor list, so skew costs nothing
-  * beyond the shuffle of its edges).
+  * round is one shuffle of the symmetrized edge set, a per-center min
+  * window, and a project → distinct — no collect_list.
+  *
+  * Skew: the window has no map-side partial aggregate (the groupBy-min
+  * it replaced did), so each center's whole symmetrized adjacency is
+  * buffered in ONE WindowExec task. The buffer is spill-backed
+  * (ExternalAppendOnlyUnsafeRowArray), so a hub never OOMs, but a
+  * hub-heavy graph pays that hub's neighbor list in a single task.
   *
   * Scale: every round's volume is bounded by the CURRENT edge set,
   * which only shrinks (toward one star edge per non-root node).

@@ -469,18 +469,15 @@ object AdvancedQueries {
     * 256 MB default) and restored in a finally. The oracle computes the
     * same CASE-mapped join — the split must never change results. */
   def q109SkewJoinAqe(s: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB")
-    val prev = confs.map { case (k, _) => k -> s.conf.get(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    graft.Sessions.withConf(s,
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB") {
       val out = q109Inner(s, dir)
       val schema = out.schema
       val rows = java.util.Arrays.asList(out.collect(): _*)
       s.createDataFrame(rows, schema)
-    } finally prev.foreach { case (k, v) => s.conf.set(k, v) }
+    }
   }
 
   /** The lazy skewed-join plan (shared with PlanSpec, which manages the
@@ -537,9 +534,10 @@ object AdvancedQueries {
     * temp-located database, and the join then plans as a sort-merge
     * over co-located buckets with ZERO shuffle of either side — the
     * decisive layout at 100 TB, where re-shuffling a fact table per
-    * join is the dominant cost (broadcast is forced off to prove the
-    * big-big shape; BucketedJoinPlan exposes the plan and PlanSpec
-    * asserts no hash-partitioning Exchange). The aggregate over the
+    * join is the dominant cost (a merge hint keeps the gate-sized
+    * sides from broadcasting, so the big-big shape is what runs;
+    * PlanSpec asserts SortMergeJoin and no hash-partitioning Exchange
+    * on this very DataFrame). The aggregate over the
     * joined rows is what the oracle replays from the raw tables, so
     * the gate also proves bucketed write+read loses nothing.
     *
@@ -564,24 +562,20 @@ object AdvancedQueries {
       .select(col("o_orderkey"), col("o_orderpriority"))
       .write.mode("overwrite").bucketBy(16, "o_orderkey")
       .sortBy("o_orderkey").saveAsTable("q226.ord_b")
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.table("q226.li_b")
-        .join(s.table("q226.ord_b"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_lines"),
-          graft.Oracle.lsum(col("l_quantity").cast("long")).as("sum_qty"),
-          graft.Oracle.lsum(col("cents")).as("sum_cents"))
-        .orderBy(col("o_orderpriority"))
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    q226JoinPlan(s)
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_lines"),
+        graft.Oracle.lsum(col("l_quantity").cast("long")).as("sum_qty"),
+        graft.Oracle.lsum(col("cents")).as("sum_cents"))
+      .orderBy(col("o_orderpriority"))
   }
 
-  /** The joined (pre-aggregate) bucketed plan, for PlanSpec's
-    * zero-Exchange assertion. Caller must have run [[q226BucketedJoin]]
-    * (or call this after it) so the bucketed tables exist. */
+  /** The joined (pre-aggregate) bucketed plan: merge-hinted, so it
+    * plans as a sort-merge over the co-located buckets whatever the
+    * broadcast threshold. The bucketed tables must exist (written by
+    * [[q226BucketedJoin]]). */
   def q226JoinPlan(s: SparkSession): DataFrame =
-    s.table("q226.li_b")
+    s.table("q226.li_b").hint("merge")
       .join(s.table("q226.ord_b"), col("l_orderkey") === col("o_orderkey"))
 
   val q226Sql: String =

@@ -567,15 +567,13 @@ object DataflowQueries {
     * Integer cents keep the total exactly representable (< 2⁵³) to
     * ~sf4000, and ANSI long sums throw loudly beyond int64. */
   def q104BloomPrunedJoin(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "0")
-    try {
+    graft.Sessions.withConf(s,
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       val out = q104Inner(s, dir)
       val schema = out.schema
       val rows = java.util.Arrays.asList(out.collect(): _*)
       s.createDataFrame(rows, schema)
-    } finally s.conf.set(key, prev)
+    }
   }
 
   /** The lazy join plan (shared with PlanSpec, which manages the conf

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.VectorExpressions.vecDot
 
 /** Dev-only stage profiler for the vector/ANN memo chain (the q139/q96
@@ -12,14 +11,7 @@ import org.apache.spark.sql.graft.VectorExpressions.vecDot
 object VecProf {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-vec-prof")
     spark.sparkContext.setLogLevel("ERROR")
     def time(label: String)(act: => Long): Unit = {
       val t0 = System.nanoTime()

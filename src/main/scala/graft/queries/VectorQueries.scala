@@ -168,7 +168,12 @@ object VectorQueries {
       // the embedding VALUE, so Lloyd scores once per distinct sampled
       // embedding and weights the mean by the class's sampled-member
       // count. Class-sized and read on both sides of each round's
-      // assign × 2 rounds ⇒ eagerly checkpointed like `e`.
+      // assign × 2 rounds ⇒ eagerly checkpointed like `e`. Classes
+      // are keyed by xxhash64 of the embedding — the [[embMembers]]
+      // n²/2⁶⁴ collision stance: two distinct sampled embeddings that
+      // collide would merge their multiplicities onto one arbitrary
+      // `first` representative and perturb training; accepted as
+      // negligible at any corpus size the registry serves.
       val dv = Iteration.ckpt(e
         .groupBy(xxhash64(col("embedding")).as("fp"))
         .agg(count(lit(1)).as("mult"),

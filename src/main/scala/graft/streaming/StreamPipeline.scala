@@ -166,29 +166,21 @@ object StreamPipeline {
     // shapes the fresh replay; a production deployment sizes it per
     // query the same way. Exact results are partition-count-invariant
     // (the hash gate proves it per run).
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(partKey)
-    s.conf.set(partKey, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    // State-store PROVIDER (round-9 verdict item 7): RocksDB by default —
-    // HDFSBackedStateStore keeps every version's key-value map ON HEAP,
-    // which is exactly the unbounded-state hazard the q222 sessionization
-    // replay scales with (4.7×/decade on heap state); RocksDB keeps state
-    // off-heap with an LSM on local disk, the production choice for
-    // large-state streaming. Replays are fresh per run (the checkpoint is
-    // a temp dir), so the provider — like the partition override — only
-    // shapes this run; SPARK_GRAFT_STATE_STORE=hdfs opts back into the
-    // heap store for A/B timing.
+    //
+    // State-store PROVIDER (round-9 verdict item 7): RocksDB unless the
+    // session already names one — HDFSBackedStateStore keeps every
+    // version's key-value map ON HEAP, which is exactly the
+    // unbounded-state hazard the q222 sessionization replay scales with
+    // (4.7×/decade on heap state); RocksDB keeps state off-heap with an
+    // LSM on local disk, the production choice for large-state
+    // streaming. Replays are fresh per run (the checkpoint is a temp
+    // dir), so the provider — like the partition override — only shapes
+    // this run.
     val storeKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevStore = s.conf.getOption(storeKey)
-    val store = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb") match {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case "hdfs" =>
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      case other => other // full provider class name
-    }
-    s.conf.set(storeKey, store)
-    try {
+    val store = s.conf.getAll.getOrElse(storeKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try graft.Sessions.withConf(s,
+        "spark.sql.shuffle.partitions" -> "4", storeKey -> store) {
       try {
         val q = start(outDir, ck)
         try q.awaitTermination()
@@ -197,11 +189,6 @@ object StreamPipeline {
         graft.Staging.deleteRecursively(outDir); throw e
       }
     } finally {
-      s.conf.set(partKey, prevParts)
-      prevStore match {
-        case Some(v) => s.conf.set(storeKey, v)
-        case None => s.conf.unset(storeKey)
-      }
       graft.Staging.deleteRecursively(streamDir)
       graft.Staging.deleteRecursively(ck)
     }

@@ -49,17 +49,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q226: bucketed join is a sort-merge with zero hash-partitioning Exchange") {
-    AdvancedQueries.q226BucketedJoin(spark, dir).collect() // writes bucketed tables
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = AdvancedQueries.q226JoinPlan(spark)
-      j.collect()
-      val p = j.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("Exchange hashpartitioning"),
-        "bucketed sides re-shuffled — co-location lost")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the registry DataFrame itself, at the session's own broadcast
+    // threshold: the gate-sized sides would broadcast unless the plan
+    // forces the big-big shape
+    val df = AdvancedQueries.q226BucketedJoin(spark, dir)
+    df.collect() // AQE: read the final plan
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin"), p)
+    assert(!p.contains("BroadcastHashJoin"), p)
+    assert(!p.contains("Exchange hashpartitioning(l_orderkey") &&
+      !p.contains("Exchange hashpartitioning(o_orderkey"),
+      "bucketed sides re-shuffled — co-location lost\n" + p)
   }
 
   test("q16: global top-k is TakeOrderedAndProject, not a full sort") {
@@ -313,10 +313,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q104: runtime Bloom filter prunes the fact side below its rollup") {
-    val key = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "0")
-    try {
+    Sessions.withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       val opt = DataflowQueries.q104Inner(spark, dir)
         .queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain") && opt.contains("bloom_filter_agg"),
@@ -326,19 +324,16 @@ class PlanSpec extends AnyFunSuite {
       // per-order Aggregate that it feeds
       assert(opt.indexOf("Aggregate [l_orderkey") <
         opt.indexOf("might_contain"), opt)
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("q109: AQE splits the skewed partition — SortMergeJoin(skew=true) in the final plan") {
-    val confs = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1KB")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Sessions.withConf(spark,
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1KB") {
       // the skew decision happens at runtime — execute, then read the
       // final adaptive plan
       val df = AdvancedQueries.q109Inner(spark, TestSpark.sf1Dir)
@@ -346,7 +341,7 @@ class PlanSpec extends AnyFunSuite {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         "AQE did not split the hot partition:\n" + p)
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("q77 iterations: no broadcast — co-partitioned SMJ off the cached layout") {

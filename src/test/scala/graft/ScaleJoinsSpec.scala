@@ -44,10 +44,8 @@ class ScaleJoinsSpec extends AnyFunSuite {
       .sortBy("l_orderkey").saveAsTable("li_b")
     ord.write.mode("overwrite").bucketBy(8, "o_orderkey")
       .sortBy("o_orderkey").saveAsTable("ord_b")
-    val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force the big-big plan shape (at real scale neither side broadcasts)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force the big-big plan shape (at real scale neither side broadcasts)
+    try Sessions.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = s.table("li_b")
         .join(s.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
       joined.collect()
@@ -57,7 +55,6 @@ class ScaleJoinsSpec extends AnyFunSuite {
       assert(!p.contains("Exchange hashpartitioning"), p)
       assert(joined.count() === li.count()) // every line has its order
     } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       s.sql("DROP TABLE IF EXISTS li_b")
       s.sql("DROP TABLE IF EXISTS ord_b")
     }

@@ -226,15 +226,15 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful queries run unchanged on the RocksDB state store (100 TB spill path)") {
-    // The default HDFS-backed provider keeps state on the executor heap
-    // — fine for tests, an OOM at 100 TB stream state. RocksDB keeps
-    // state off-heap with disk spill (provider bundled in Spark's
+    // The HDFS-backed provider keeps state on the executor heap — fine
+    // for tests, an OOM at 100 TB stream state. RocksDB keeps state
+    // off-heap with disk spill (provider bundled in Spark's
     // distribution, rocksdbjni on the classpath). The provider class is
-    // read per-query at start, so flipping the session conf covers all
-    // four registry streaming queries; results must be IDENTICAL to the
-    // default provider (same hash gate), only the state backend moves.
+    // read per-query at start, and the replays keep a provider the
+    // session names, so each run below pins its backend; results must
+    // be IDENTICAL on both (same hash gate), only the state backend moves.
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val pkg = "org.apache.spark.sql.execution.streaming.state."
     val dir = TestSpark.sfDir
     def run() = Map(
       "q83" -> StreamPipeline.q83StreamingDedup(spark, dir)
@@ -243,17 +243,10 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted.toSeq,
       "q99" -> StreamPipeline.q99StreamIntervalJoin(spark, dir)
         .collect().map(_.toString).sorted.toSeq)
-    val baseline = run()
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, rocks)
-    try {
-      val onRocks = run()
-      assert(onRocks === baseline,
-        "state backend changed query results — provider is not transparent")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val baseline = Sessions.withConf(spark, key -> (pkg + "HDFSBackedStateStoreProvider"))(run())
+    val onRocks = Sessions.withConf(spark, key -> (pkg + "RocksDBStateStoreProvider"))(run())
+    assert(onRocks === baseline,
+      "state backend changed query results — provider is not transparent")
   }
 
   test("q222 multi-batch CDC merge equals the one-shot batch upsert") {
